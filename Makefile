@@ -4,13 +4,26 @@
 
 COMPOSE ?= docker compose
 
-.PHONY: test bench live-env live-test live-down
+.PHONY: test bench perfbench perfcompare live-env live-test live-down
 
 test:
 	python -m pytest tests/ -q
 
 bench:
 	python bench.py
+
+# The repository benchmark (perfbench/README.md): both BENCHMARK.json
+# workloads, untraced, at the run length BENCHMARK.json sets.
+SEED ?= 1
+RUN_S = $(shell python3 -c 'import json; print(json.load(open("BENCHMARK.json"))["run_seconds"])')
+perfbench:
+	python3 perfbench/run.py --workload large_state --seed $(SEED) --seconds $(RUN_S) --trace 0
+	python3 perfbench/run.py --workload query_mix --seed $(SEED) --seconds $(RUN_S) --trace 0
+
+# Parent-versus-change verdicts over two directories of saved run.py
+# stdout files (*.out): make perfcompare PARENT=dir CHANGE=dir
+perfcompare:
+	python3 perfbench/compare.py $(PARENT) $(CHANGE)
 
 # Start the live services and leave them up (for iterating on the legs
 # by hand with TEST_POSTGRES_DSN / TEST_NEO4J_URI exported).

@@ -19,6 +19,7 @@ Two registries:
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -606,8 +607,48 @@ TESTDATA_TABLE_NAMES = (
 )
 
 
+# Schema inference on a schemaless ``spark.read.parquet`` is a Spark job
+# (a footer read), paid again on every reference to an unchanged file.
+# One inferred schema per path, reused while the file's stat stamp and the
+# session's parquet schema confs are unchanged; a rewritten file (or a conf
+# that changes what inference yields) is inferred afresh. Two threads that
+# miss together both infer; either entry they store is valid.
+_PARQUET_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    version. Paths ``os.stat`` cannot see (object-store URIs) are read
+    schemaless."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = os.path.abspath(path)
+    stamp = (
+        st.st_ino,
+        st.st_size,
+        st.st_mtime_ns,
+        tuple(spark.conf.get(k, None) for k in _PARQUET_SCHEMA_CONFS),
+    )
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Vectorized parquet scan; Catalyst prunes columns/filters from here.
+    The schema is inferred on the first load of a file and reused after
+    (``_read_parquet``), so a repeated reference starts no Spark job.
 
     The events table carries TIMESTAMP(NANOS) which Spark's parquet reader
     rejects by default; read nanos as long and convert to a microsecond
@@ -615,11 +656,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     2^53 ns)."""
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -24,7 +24,12 @@ Storage layout & scale:
   their files stay byte-identical (asserted by tests);
 - the merge itself is one shuffle on the PK within touched buckets;
   incoming batches are deduped per PK *before* merging (SURVEY §7.3 hard
-  part 1).
+  part 1);
+- ``_sink_meta.json`` pins the layout (n_buckets, pk, version column)
+  and the stored-row schema, ``__bucket`` included. The touched-bucket
+  merge read and ``read()`` pass that schema to the reader, so neither
+  starts a schema-inference job; a batch whose columns or types differ
+  from it is refused.
 
 Crash safety (single writer per table, like the reference's
 one-importer-per-table topology): each touched bucket is swapped by
@@ -39,11 +44,13 @@ recency guard makes the re-merge idempotent.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.dedup import last_writer_wins
 
@@ -113,7 +120,9 @@ class LakeUpsertSink:
     def read(self) -> DataFrame | None:
         if not self.exists():
             return None
-        df = self.spark.read.parquet(self._data_dir)
+        schema = self._stored_schema()
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        df = reader.parquet(self._data_dir)
         return df.drop(_BUCKET) if _BUCKET in df.columns else df
 
     # -- write -------------------------------------------------------------
@@ -130,84 +139,15 @@ class LakeUpsertSink:
 
     def upsert(self, incoming: DataFrame, epoch: int = 0) -> None:
         self._recover()
-        self._check_meta()
         pk = list(self.primary_key)
-        # persist: the batch is evaluated TWICE (the touched-bucket
-        # collect, then the merged staging write). Unpinned, the second
-        # evaluation re-runs the whole upstream plan — and if that plan
-        # embeds any non-determinism (a re-read of a changing source),
-        # it can emit a bucket that was not in `touched`, whose existing
-        # directory was never merged: the per-bucket swap would then
-        # replace it with only new rows, silently deleting stored PKs.
         batch = last_writer_wins(
             incoming.withColumn("__src_priority", F.lit(1)), pk, self._order()
-        ).withColumn(_BUCKET, self._bucket_expr()).persist()
-        try:
-            self._upsert_inner(batch, epoch)
-        finally:
-            batch.unpersist()
-
-    def _meta_path(self) -> str:
-        return os.path.join(self.root, "_sink_meta.json")
-
-    def _check_meta(self) -> None:
-        """Pin (n_buckets, pk) across reopens: a sink reopened with a
-        different n_buckets hashes updated PKs into different buckets,
-        the merge never sees the old version, and read() returns
-        duplicate PKs forever — silently. First write records the
-        layout; every later open asserts it."""
-        import json
-
-        path = self._meta_path()
-        if os.path.exists(path):
-            with open(path) as f:
-                meta = json.load(f)
-            if meta.get("n_buckets") != self.n_buckets or tuple(
-                meta.get("primary_key", ())
-            ) != tuple(self.primary_key):
-                raise ValueError(
-                    f"sink at {self.root!r} was written with "
-                    f"n_buckets={meta.get('n_buckets')}, "
-                    f"pk={tuple(meta.get('primary_key', ()))}; reopened "
-                    f"with n_buckets={self.n_buckets}, "
-                    f"pk={tuple(self.primary_key)} — a layout change "
-                    "requires a rewrite, not a reopen"
-                )
-            # version_column drives the last-writer-wins recency guard;
-            # reopening with a different one silently changes which row
-            # survives a PK collision over already-stored data — the same
-            # class of divergence the meta file exists to prevent. Meta
-            # files written before this key existed are upgraded in place.
-            if "version_column" not in meta:
-                meta["version_column"] = self.version_column
-                with open(path, "w") as f:
-                    json.dump(meta, f)
-            elif meta["version_column"] != self.version_column:
-                raise ValueError(
-                    f"sink at {self.root!r} was written with "
-                    f"version_column={meta['version_column']!r}; reopened "
-                    f"with {self.version_column!r} — a recency-guard "
-                    "change requires a rewrite, not a reopen"
-                )
-        else:
-            os.makedirs(self.root, exist_ok=True)
-            with open(path, "w") as f:
-                json.dump(
-                    {
-                        "n_buckets": self.n_buckets,
-                        "primary_key": list(self.primary_key),
-                        "version_column": self.version_column,
-                    },
-                    f,
-                )
-
-    def _upsert_inner(self, batch: DataFrame, epoch: int) -> None:
-        pk = list(self.primary_key)
-        full_swap = False
+        ).withColumn(_BUCKET, self._bucket_expr())
+        schema = self._check_meta(batch.drop("__src_priority").schema)
         if not self.exists():
-            merged = batch.drop("__src_priority")
-            full_swap = True
-        elif not self._is_bucketed():
+            self._write(batch.drop("__src_priority"), epoch, full_swap=True)
+            return
+        if not self._is_bucketed():
             # one-time migration of a legacy unpartitioned table: full
             # merge + full rewrite into the bucketed layout
             existing = (
@@ -218,8 +158,19 @@ class LakeUpsertSink:
             merged = last_writer_wins(
                 existing.unionByName(batch), pk, self._order()
             ).drop("__src_priority")
-            full_swap = True
-        else:
+            self._write(merged, epoch, full_swap=True)
+            return
+        # persist: on this path the batch is evaluated TWICE (the
+        # touched-bucket collect, then the merged staging write).
+        # Unpinned, the second evaluation re-runs the whole upstream plan
+        # — and if that plan embeds any non-determinism (a re-read of a
+        # changing source), it can emit a bucket that was not in
+        # `touched`, whose existing directory was never merged: the
+        # per-bucket swap would then replace it with only new rows,
+        # silently deleting stored PKs. The other two paths read the
+        # batch once, where a cache would only add a build stage.
+        batch = batch.persist()
+        try:
             # touched buckets only: one tiny driver-side distinct (at most
             # n_buckets ints — control-plane, not data)
             touched = sorted(
@@ -232,7 +183,8 @@ class LakeUpsertSink:
             live = [p for p in bucket_dirs if os.path.isdir(p)]
             if live:
                 existing = (
-                    self.spark.read.option("basePath", self._data_dir)
+                    self.spark.read.schema(schema)
+                    .option("basePath", self._data_dir)
                     .parquet(*live)
                     .withColumn("__src_priority", F.lit(0))
                 )
@@ -241,7 +193,107 @@ class LakeUpsertSink:
                 ).drop("__src_priority")
             else:
                 merged = batch.drop("__src_priority")
+            self._write(merged, epoch, full_swap=False)
+        finally:
+            batch.unpersist()
 
+    # -- layout metadata ---------------------------------------------------
+    def _meta_path(self) -> str:
+        return os.path.join(self.root, "_sink_meta.json")
+
+    def _load_meta(self) -> dict | None:
+        path = self._meta_path()
+        if not os.path.exists(path):
+            return None
+        with open(path) as f:
+            return json.load(f)
+
+    def _write_meta(self, meta: dict) -> None:
+        """Temp file + rename: a crash mid-write leaves the previous meta
+        file (or none) in place, never a truncated one that every later
+        open would fail to parse. A leftover temp file is overwritten by
+        the next write and otherwise ignored."""
+        path = self._meta_path()
+        tmp = path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(meta, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+
+    def _stored_schema(self) -> T.StructType | None:
+        """The stored-row schema (``__bucket`` included) pinned in the meta
+        file; None for a sink whose meta predates it, which the next
+        upsert upgrades (reads until then infer, as before)."""
+        meta = self._load_meta()
+        if meta is None or "schema" not in meta:
+            return None
+        return T.StructType.fromJson(meta["schema"])
+
+    def _check_meta(self, schema: T.StructType) -> T.StructType:
+        """Pin (n_buckets, pk, version_column, schema) across reopens and
+        return the stored-row schema reads use.
+
+        A sink reopened with a different n_buckets hashes updated PKs into
+        different buckets, the merge never sees the old version, and
+        read() returns duplicate PKs forever — silently. First write
+        records the layout; every later open asserts it. ``schema`` is
+        the batch's stored-row schema (``__bucket`` included): the first
+        write records it so reads skip schema inference, and a later
+        batch that differs raises rather than writing buckets a
+        whole-table read could not scan together."""
+        schema = _as_nullable(schema)
+        loaded = self._load_meta()
+        meta = dict(
+            loaded
+            or {"n_buckets": self.n_buckets, "primary_key": list(self.primary_key)}
+        )
+        if meta.get("n_buckets") != self.n_buckets or tuple(
+            meta.get("primary_key", ())
+        ) != tuple(self.primary_key):
+            raise ValueError(
+                f"sink at {self.root!r} was written with "
+                f"n_buckets={meta.get('n_buckets')}, "
+                f"pk={tuple(meta.get('primary_key', ()))}; reopened "
+                f"with n_buckets={self.n_buckets}, "
+                f"pk={tuple(self.primary_key)} — a layout change "
+                "requires a rewrite, not a reopen"
+            )
+        # version_column drives the last-writer-wins recency guard;
+        # reopening with a different one silently changes which row
+        # survives a PK collision over already-stored data — the same
+        # class of divergence the meta file exists to prevent. Meta files
+        # written before this key or the schema key existed are upgraded
+        # in place (the schema inferred once from the stored data).
+        if "version_column" not in meta:
+            meta["version_column"] = self.version_column
+        elif meta["version_column"] != self.version_column:
+            raise ValueError(
+                f"sink at {self.root!r} was written with "
+                f"version_column={meta['version_column']!r}; reopened "
+                f"with {self.version_column!r} — a recency-guard "
+                "change requires a rewrite, not a reopen"
+            )
+        if "schema" not in meta:
+            stored = self._inferred_schema() if self.exists() else schema
+            meta["schema"] = json.loads(stored.json())
+        if meta != loaded:
+            os.makedirs(self.root, exist_ok=True)
+            self._write_meta(meta)
+        stored = T.StructType.fromJson(meta["schema"])
+        _require_same_columns(self.root, stored, schema)
+        return stored
+
+    def _inferred_schema(self) -> T.StructType:
+        """One schema-inference pass over the stored data, ``__bucket``
+        appended for a legacy unpartitioned table (where it reads as
+        null and is dropped)."""
+        schema = _as_nullable(self.spark.read.parquet(self._data_dir).schema)
+        if _BUCKET not in schema.fieldNames():
+            schema = schema.add(_BUCKET, T.IntegerType())
+        return schema
+
+    def _write(self, merged: DataFrame, epoch: int, full_swap: bool) -> None:
         staging = os.path.join(self.root, f".staging-{epoch}")
         if os.path.isdir(staging):
             shutil.rmtree(staging)
@@ -269,3 +321,39 @@ class LakeUpsertSink:
             os.rename(os.path.join(staging, sub), dst)
         shutil.rmtree(old)
         shutil.rmtree(staging, ignore_errors=True)
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field and element nullable and no field metadata:
+    what a parquet read reports, whatever the writer's nullability."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType)) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType))
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType))
+    return dt
+
+
+def _require_same_columns(
+    root: str, stored: T.StructType, batch: T.StructType
+) -> None:
+    """Same column names and types, in any order (the merge is by name)."""
+    want = {f.name: f.dataType for f in stored.fields}
+    got = {f.name: f.dataType for f in batch.fields}
+    if want == got:
+        return
+    changed = {
+        n: f"{want[n].simpleString()} -> {got[n].simpleString()}"
+        for n in want.keys() & got.keys()
+        if want[n] != got[n]
+    }
+    raise ValueError(
+        f"batch schema differs from the stored schema of sink {root!r}: "
+        f"missing columns {sorted(want.keys() - got.keys())}, "
+        f"new columns {sorted(got.keys() - want.keys())}, "
+        f"changed types {changed} — a schema change requires a rewrite, "
+        "not an upsert"
+    )

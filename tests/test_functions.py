@@ -52,15 +52,28 @@ def test_parse_json_column(spark):
 
 def test_parse_json_column_validates_and_quarantines(spark):
     """Garbage payloads don't silently pass through the fast path: they
-    become NULL (countable via json_parse_failed) or raise in strict mode."""
+    become NULL (countable via json_parse_failed) or raise in strict mode.
+    Mixed in one batch with good repr and JSON rows, each row takes its
+    own branch (the UDF's argument is nulled for non-repr rows)."""
     df = spark.createDataFrame(
-        [(1, '{"a": 1}'), (2, "{not json"), (3, "{'bad repr"), (4, None)],
+        [
+            (1, '{"a": 1}'),
+            (2, "{not json"),
+            (3, "{'bad repr"),
+            (4, None),
+            (5, "{'k': [1, 2]}"),
+            (6, '[{"b": "x"}]'),
+            (7, "[{'t': 'it\\'s'}]"),
+        ],
         "id long, payload string",
     )
     got = {r.id: r.c for r in df.select("id", parse_json_column("payload").alias("c")).collect()}
     assert got[1] == '{"a": 1}'
     assert got[2] is None and got[3] is None  # quarantined, not passed through
     assert got[4] is None
+    assert json.loads(got[5]) == {"k": [1, 2]}
+    assert got[6] == '[{"b": "x"}]'
+    assert json.loads(got[7]) == [{"t": "it's"}]
 
     failed = sorted(
         r.id for r in df.filter(json_parse_failed("payload")).collect()

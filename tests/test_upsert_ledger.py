@@ -4,6 +4,8 @@ idempotent re-import, 65535-param chunking, in-order completion."""
 from __future__ import annotations
 
 import datetime
+import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -419,6 +421,97 @@ def test_meta_missing_version_column_upgrades_in_place(spark, tmp_path):
     reopened.upsert(_df(spark, [(1, "b", _ts(2))]), epoch=2)
     with open(meta_path) as f:
         assert json.load(f)["version_column"] == "updated_at"
+
+
+def _meta(root):
+    with open(os.path.join(root, "_sink_meta.json")) as f:
+        return json.load(f)
+
+
+def test_read_with_stored_schema_equals_inferred_read(spark, spark_jobs, tmp_path):
+    """read() and the merge read use the schema pinned in the meta file;
+    what they return equals a schema-inferring read of the same files,
+    and read() starts no Spark job of its own."""
+    root = str(tmp_path / "tbl")
+    sink = LakeUpsertSink(spark, root, ("id",), "updated_at", n_buckets=4)
+    schema = (
+        "id long, v string, s short, tags array<string>, "
+        "m struct<k: string, n: int>, b binary, updated_at timestamp"
+    )
+    rows = [
+        (i, f"v{i}", i % 3, [f"t{i}"], (f"k{i}", i), bytearray([i]), _ts(1 + i % 2))
+        for i in range(12)
+    ]
+    sink.upsert(spark.createDataFrame(rows[:8], schema), epoch=1)
+    sink.upsert(spark.createDataFrame(rows[4:], schema), epoch=2)
+    assert [f["name"] for f in _meta(root)["schema"]["fields"]][-1] == "__bucket"
+
+    inferred = spark.read.parquet(os.path.join(root, "data")).drop("__bucket")
+    assert spark_jobs(sink.read) == []
+    got = sink.read()
+    assert got.schema == inferred.schema
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, inferred.collect()))
+    assert sorted(r.id for r in got.collect()) == list(range(12))
+
+
+def test_meta_missing_schema_upgrades_in_place(spark, tmp_path):
+    """A meta file written before the schema key existed: read() still
+    works (inferring), and the next upsert stores the inferred schema."""
+    root = str(tmp_path / "tbl")
+    sink = LakeUpsertSink(spark, root, ("id",), "updated_at", n_buckets=8)
+    sink.upsert(_df(spark, [(1, "a", _ts(1)), (2, "b", _ts(1))]), epoch=1)
+    meta = _meta(root)
+    stored = meta.pop("schema")
+    with open(os.path.join(root, "_sink_meta.json"), "w") as f:
+        json.dump(meta, f)
+
+    reopened = LakeUpsertSink(spark, root, ("id",), "updated_at", n_buckets=8)
+    assert _state(reopened) == {1: ("a", _ts(1)), 2: ("b", _ts(1))}
+    reopened.upsert(_df(spark, [(1, "a2", _ts(2))]), epoch=2)
+    assert _meta(root)["schema"] == stored
+    assert _state(reopened) == {1: ("a2", _ts(2)), 2: ("b", _ts(1))}
+
+
+def test_batch_with_mismatched_schema_raises(spark, sink):
+    sink.upsert(_df(spark, [(1, "a", _ts(1))]), epoch=1)
+    bad = spark.createDataFrame([(1, 7, _ts(2))], "id long, v int, updated_at timestamp")
+    with pytest.raises(ValueError, match=r"changed types \{'v': 'string -> int'\}"):
+        sink.upsert(bad, epoch=2)
+    extra = spark.createDataFrame(
+        [(1, "b", "x", _ts(2))], "id long, v string, w string, updated_at timestamp"
+    )
+    with pytest.raises(ValueError, match=r"new columns \['w'\]"):
+        sink.upsert(extra, epoch=3)
+    assert _state(sink) == {1: ("a", _ts(1))}
+    # same columns in another order, non-nullable: accepted
+    reordered = _df(spark, [(1, "c", _ts(3))]).select("updated_at", "id", "v")
+    sink.upsert(reordered, epoch=4)
+    assert _state(sink) == {1: ("c", _ts(3))}
+
+
+def test_leftover_meta_temp_file_does_not_break_reopen(spark, tmp_path):
+    """The meta file is replaced atomically; a temp file a crash left
+    behind is ignored on reopen and overwritten by the next meta write."""
+    root = str(tmp_path / "tbl")
+    LakeUpsertSink(spark, root, ("id",), "updated_at").upsert(
+        _df(spark, [(1, "a", _ts(1))]), epoch=1
+    )
+    meta_path = os.path.join(root, "_sink_meta.json")
+    with open(meta_path + ".tmp", "w") as f:
+        f.write('{"n_buckets": 16, "prim')  # torn write
+    reopened = LakeUpsertSink(spark, root, ("id",), "updated_at")
+    assert _state(reopened) == {1: ("a", _ts(1))}
+    reopened.upsert(_df(spark, [(2, "b", _ts(1))]), epoch=2)
+    assert _state(reopened) == {1: ("a", _ts(1)), 2: ("b", _ts(1))}
+
+    # a meta upgrade goes through the temp file and leaves none behind
+    meta = _meta(root)
+    del meta["version_column"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    reopened.upsert(_df(spark, [(3, "c", _ts(1))]), epoch=3)
+    assert _meta(root)["version_column"] == "updated_at"
+    assert not os.path.exists(meta_path + ".tmp")
 
 
 def test_ledger_deferred_sync_batches_fsyncs(tmp_path, monkeypatch):
